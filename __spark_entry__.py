@@ -2449,16 +2449,24 @@ def q_checkpoint_lineage(spark, sf_dir):
     second commit (resume actually skipped), exactly one pre-overwrite
     intent exists, and the commit's monotonic seq is strictly after the
     intent's (the resume-ordering contract).  Any regression in
-    checkpoint/resume semantics flips a boolean and fails the hash."""
-    import re as _re
+    checkpoint/resume semantics flips a boolean and fails the hash.
+    The workdir is private to this call (mkdtemp) and removed at the
+    end, so concurrent drivers cannot wipe each other's; the result is
+    collected before the removal and carries no path."""
     import shutil
     import tempfile
 
+    wd = tempfile.mkdtemp(prefix="grs_ckpt_contract_")
+    try:
+        out = _checkpoint_lineage(spark, sf_dir, wd)
+        return spark.createDataFrame(out.collect(), out.schema)
+    finally:
+        shutil.rmtree(wd, ignore_errors=True)
+
+
+def _checkpoint_lineage(spark, sf_dir, wd):
     from graphrag_rs_spark.stages.checkpoint import CheckpointManager
 
-    wd = os.path.join(tempfile.gettempdir(),
-                      "grs_ckpt_contract_" + _re.sub(r"\W", "_", sf_dir))
-    shutil.rmtree(wd, ignore_errors=True)
     d = _docs(spark, sf_dir)
 
     def stage1():

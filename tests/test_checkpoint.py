@@ -128,3 +128,85 @@ def test_seq_orders_events_without_wall_clock(spark, tmp_path):
     # A recommits (any ts) → A eligible again, B never was
     a.run_stage("s", lambda: spark.range(5).toDF("v"), resume=False)
     assert a.completed("s") and not b.completed("s")
+
+
+def test_mixed_layout_log_follows_seq(spark, tmp_path):
+    """A log holding a pre-seq (7-column) file beside seq files is read
+    under one schema: the legacy row's seq is 0, so seq, not its later
+    ts, orders it before every seq event."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    wd = str(tmp_path / "wd")
+    os.makedirs(os.path.join(wd, "_checkpoints"))
+    os.makedirs(os.path.join(wd, "s"))
+    legacy = pa.table({
+        "run_id": ["runA"], "stage": ["s"],
+        "partition_id": pa.array([-1], pa.int32()), "rows": [5],
+        "checksum": [0], "status": ["committed"], "ts": [200.0]})
+    # sorts before every part-<seq>-* name: a reader that takes its
+    # schema from the first file would see no seq column at all
+    pq.write_table(legacy, os.path.join(
+        wd, "_checkpoints", "part-0-legacy.parquet"))
+    a = CheckpointManager(spark, wd, "runA")
+    b = CheckpointManager(spark, wd, "runB")
+    assert a.completed("s") and a._next_seq() == 1
+    b._append([("runB", "s", -2, 0, 0, "writing", 1.0)])
+    assert b._next_seq() == 2
+    assert not a.completed("s") and not b.completed("s")
+    b._append([("runB", "s", -1, 9, 0, "committed", 2.0)])
+    assert b._next_seq() == 3
+    assert b.completed("s") and not a.completed("s")
+
+
+def test_resume_from_spark_written_log(spark, tmp_path):
+    """A log written by Spark's parquet writer (part files, _SUCCESS,
+    .crc) resumes, and a dir mixing both writers reads back in Spark
+    with the same column types."""
+    wd = str(tmp_path / "wd")
+    ckpt = os.path.join(wd, "_checkpoints")
+    spark.range(5).toDF("v").write.parquet(os.path.join(wd, "s"))
+    legacy_ddl = ("run_id string, stage string, partition_id int, "
+                  "rows long, checksum long, status string, ts double, "
+                  "seq long")
+    for row in [("runA", "s", -2, 0, 0, "writing", 1.0, 1),
+                ("runA", "s", -1, 5, 0, "committed", 2.0, 2)]:
+        (spark.createDataFrame([row], schema=legacy_ddl)
+         .coalesce(1).write.mode("append").parquet(ckpt))
+    names = os.listdir(ckpt)
+    assert "_SUCCESS" in names and any(n.endswith(".crc") for n in names)
+
+    a = CheckpointManager(spark, wd, "runA")
+    assert a.completed("s") and a._next_seq() == 3
+    out = a.run_stage("s", lambda: pytest.fail("resumed stage recomputed"))
+    assert out.count() == 5
+    a.run_stage("t", lambda: spark.range(3).toDF("v"))
+    assert a.completed("t") and a._next_seq() == 5
+
+    ck = spark.read.parquet(ckpt)
+    types = dict(ck.dtypes)
+    assert (types["partition_id"], types["rows"], types["seq"]) == (
+        "int", "bigint", "bigint")
+    assert sorted(r["seq"] for r in ck.filter(
+        F.col("partition_id") < 0).collect()) == [1, 2, 3, 4]
+
+
+def test_bookkeeping_starts_no_spark_job(spark, tmp_path):
+    """completed(), _next_seq() and _append() run on the driver: a job
+    group around them collects no Spark job."""
+    import time
+    wd = str(tmp_path / "wd")
+    a = CheckpointManager(spark, wd, "runA")
+    a.run_stage("s", lambda: spark.range(5).toDF("v"))
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup("ckpt-bookkeeping", "checkpoint bookkeeping")
+    try:
+        assert a.completed("s")
+        assert a._next_seq() == 3
+        a._append([("runA", "t", -2, 0, 0, "writing", time.time())])
+        assert not a.completed("t")
+        assert tracker.getJobIdsForGroup("ckpt-bookkeeping") == []
+        spark.range(3).count()  # the group does see Spark jobs
+        assert tracker.getJobIdsForGroup("ckpt-bookkeeping")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
